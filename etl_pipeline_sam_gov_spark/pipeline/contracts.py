@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_sam_gov_spark.registry import query
+from etl_pipeline_sam_gov_spark.sinks import write_parquet_snapshot
 from etl_pipeline_sam_gov_spark.tables import load_tables
 
 #: Injected "now" (replaces the wall-clock read at lambda_function.py:88).
@@ -236,13 +237,11 @@ def build_contracts(spark: SparkSession, sf_dir: str, now: str = NOW) -> DataFra
     return contracts
 
 
-def snapshot_sink(df: DataFrame, path: str) -> None:
-    """S4/S5: snapshot-overwrite parquet sink (fixed-key overwrite
-    semantics of lambda_function.py:120-128). At scale this is the one
-    place to add ``.partitionBy("postedDate")`` for partition pruning —
-    the reference's single-file overwrite does not scale past one node.
-    """
-    df.write.mode("overwrite").parquet(path)
+#: S4/S5: the staged snapshot-overwrite parquet sink (fixed-key
+#: overwrite semantics of lambda_function.py:120-128). At scale,
+#: ``sinks.write_partitioned_snapshot`` adds partition pruning — the
+#: reference's single-file overwrite does not scale past one node.
+snapshot_sink = write_parquet_snapshot
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,11 @@ page / ≥500 rows, truncate to 500. Here:
   schema (no inference; SURVEY.md §1.4 layer 1).
 - ``parallel_fetch_plan`` — the 100 TB shape: page index space as a
   DataFrame, fetch inside ``mapInPandas`` so pagination runs on
-  executors, partition-parallel, instead of serially on the driver.
+  executors, one core-sized wave of tasks, instead of serially on the
+  driver. The plan's one exchange sits after the fetch, so a consumer
+  that reads its input more than once (a global sort's range sampler,
+  a second action on the same DataFrame) reads shuffle files, not the
+  API: each page is fetched once.
 """
 
 from __future__ import annotations
@@ -96,12 +100,27 @@ def parallel_fetch_plan(
     n_pages: int,
     page_fetcher: Callable[[int], list[dict[str, Any]]],
     schema: T.StructType = RAW_OPPORTUNITIES_SCHEMA,
-    parallelism: int = 8,
+    parallelism: int | None = None,
 ) -> DataFrame:
     """Executor-side pagination: page ids as a DataFrame, fetch inside
     mapInPandas. At 100 TB the driver never touches a record; each
     task pulls its own page range (rate limits permitting) and emits
-    Arrow batches straight into the plan."""
+    Arrow batches straight into the plan.
+
+    ``parallelism`` defaults to the context's ``defaultParallelism``:
+    the fetch runs as one wave of tasks, one per core, rather than as
+    a fixed task count that spills into a second wave on a small box.
+    ``spark.range`` splits the page ids evenly without a shuffle.
+
+    The one round-robin exchange comes AFTER the fetch. Everything
+    above it reads shuffle files, so a multi-pass consumer (the range
+    sampler of a downstream global sort, or a second action on the
+    same DataFrame) does not call the API again: one call per page.
+    An action on another DataFrame derived from this one plans its own
+    exchange and fetches once more. The exchange also evens out pages
+    of uneven size before the downstream operators."""
+    if parallelism is None:
+        parallelism = spark.sparkContext.defaultParallelism
     field_names = [f.name for f in schema.fields]
 
     def fetch_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -113,5 +132,5 @@ def parallel_fetch_plan(
                 {name: [r.get(name) for r in rows] for name in field_names}
             )
 
-    pages = spark.range(n_pages).repartition(min(parallelism, max(n_pages, 1)))
-    return pages.mapInPandas(fetch_pages, schema=schema)
+    pages = spark.range(0, n_pages, 1, max(1, min(parallelism, n_pages)))
+    return pages.mapInPandas(fetch_pages, schema=schema).repartition(parallelism)

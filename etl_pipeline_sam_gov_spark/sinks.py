@@ -20,8 +20,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_parquet_snapshot(df: DataFrame, path: str) -> None:
-    """S4/S5: full-snapshot overwrite (lambda_function.py:120-128)."""
-    df.write.mode("overwrite").parquet(path)
+    """S4/S5: full-snapshot overwrite (lambda_function.py:120-128),
+    staged: the write lands in ``<path>__staging`` and only a finished
+    write is published with :func:`swap_into_place`. A plain overwrite
+    deletes the live snapshot before its job runs, so a job that fails
+    part-way would leave readers an empty directory; here it leaves the
+    previous snapshot in place."""
+    staging = path.rstrip("/") + "__staging"
+    df.write.mode("overwrite").parquet(staging)
+    swap_into_place(df.sparkSession, staging, path)
 
 
 def write_partitioned_snapshot(df: DataFrame, path: str, *cols: str) -> None:
@@ -193,8 +200,8 @@ def swap_into_place(spark: SparkSession, tmp: str, path: str) -> None:
     only between two back-to-back metadata renames — never for the
     duration of a recursive delete — and a crash at any point leaves
     the data intact at exactly one of the three suffixes. Shared by
-    compact_snapshot and the streaming CDC upsert sink. (True atomicity
-    needs a table format's metadata pointer; this is the best plain-FS
+    write_parquet_snapshot and compact_snapshot. (True atomicity needs
+    a table format's metadata pointer; this is the best plain-FS
     approximation.)"""
     sc = spark.sparkContext
     hpath = sc._jvm.org.apache.hadoop.fs.Path(path)

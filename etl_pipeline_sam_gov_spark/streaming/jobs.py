@@ -955,8 +955,8 @@ def cdc_upsert_stream(events: DataFrame, snap_path: str) -> "object":
     """Streaming CDC MERGE: each micro-batch upserts into a keyed
     parquet snapshot — per-user event count accumulates, the latest
     (ts, event_id)-ordered value wins — and the new snapshot swaps into
-    place with the two-rename dance (sinks.swap_into_place), so
-    concurrent readers never observe a missing or half-merged table.
+    place through the staged snapshot writer (sinks.write_parquet_snapshot),
+    so concurrent readers never observe a missing or half-merged table.
     Returns the StreamingQuery (caller drives and stops it).
 
     This is the streaming twin of merge_incremental_upsert: the same
@@ -964,7 +964,7 @@ def cdc_upsert_stream(events: DataFrame, snap_path: str) -> "object":
     is on the (ts_us, event_id) tuple — NOT on batch arrival order —
     so the merge is correct even when a later micro-batch carries
     earlier events (out-of-order replay, backfill)."""
-    from etl_pipeline_sam_gov_spark.sinks import swap_into_place
+    from etl_pipeline_sam_gov_spark.sinks import write_parquet_snapshot
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1014,9 +1014,7 @@ def cdc_upsert_stream(events: DataFrame, snap_path: str) -> "object":
             )
         else:
             merged = changes
-        tmp = snap_path.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_into_place(spark, tmp, snap_path)
+        write_parquet_snapshot(merged, snap_path)
 
     return (
         events.writeStream.outputMode("append")

@@ -4,11 +4,24 @@ the executor-side parallel fetch plan."""
 
 from __future__ import annotations
 
+import os
+import uuid
+from collections import Counter
+
+import pytest
+
+from etl_pipeline_sam_gov_spark.pipeline.contracts import (
+    filter_veteran_set_asides,
+    snapshot_sink,
+    transform_contracts,
+)
 from etl_pipeline_sam_gov_spark.pipeline.ingest import (
+    RAW_OPPORTUNITIES_SCHEMA,
     ingest_rows,
     paginate,
     parallel_fetch_plan,
 )
+from etl_pipeline_sam_gov_spark.plans.introspect import physical_plan
 
 
 def fake_pages(total: int, page_size: int = 100):
@@ -80,6 +93,96 @@ def test_parallel_fetch_plan_runs_on_executors(spark):
     assert {r["title"] for r in rows} == {f"p{i}" for i in range(8)}
 
 
+def ten_per_page():
+    """A fetcher of ten records per page, as a closure: cloudpickle
+    ships it by value to Python workers, which cannot import tests."""
+
+    def fetch(page_id: int):
+        return [{"noticeId": f"{page_id}-{i}", "title": f"p{page_id}"} for i in range(10)]
+
+    return fetch
+
+
+def test_parallel_fetch_plan_exchange_follows_the_fetch(spark):
+    """One exchange, above MapInPandas: everything downstream reads
+    shuffle files instead of re-running the fetch."""
+    lines = physical_plan(parallel_fetch_plan(spark, 8, ten_per_page())).splitlines()
+    exchanges = [i for i, line in enumerate(lines) if "Exchange " in line]
+    fetch = [i for i, line in enumerate(lines) if "MapInPandas" in line]
+    assert len(exchanges) == 1 and len(fetch) == 1
+    assert exchanges[0] < fetch[0]
+
+
+def test_parallel_fetch_plan_no_pages_is_empty(spark):
+    df = parallel_fetch_plan(spark, 0, ten_per_page())
+    assert df.schema == RAW_OPPORTUNITIES_SCHEMA
+    assert df.collect() == []
+
+
+@pytest.mark.parametrize("n_pages", [1, 3])
+def test_parallel_fetch_plan_fewer_pages_than_cores(spark, n_pages):
+    rows = parallel_fetch_plan(spark, n_pages, ten_per_page()).collect()
+    assert sorted(r["noticeId"] for r in rows) == sorted(
+        f"{p}-{i}" for p in range(n_pages) for i in range(10)
+    )
+
+
+def test_parallel_fetch_plan_explicit_parallelism(spark):
+    df = parallel_fetch_plan(spark, 8, ten_per_page(), parallelism=2)
+    assert "splits=2" in physical_plan(df)
+    assert df.rdd.getNumPartitions() == 2
+    assert df.count() == 80
+
+
+def recording_fetcher(marker_dir: str, fail_on: int | None = None):
+    """Ten veteran set-aside records per page. Each call leaves one
+    marker file named after its page (Python workers are separate
+    processes, so the calls cannot be counted in memory)."""
+
+    def fetch(page_id: int):
+        if page_id == fail_on:
+            raise RuntimeError(f"page {page_id} unavailable")
+        open(os.path.join(marker_dir, f"{page_id}.{uuid.uuid4().hex}"), "w").close()
+        return [
+            {
+                "noticeId": f"{page_id}-{i}",
+                "title": f"Contract {page_id}-{i}",
+                "postedDate": "2001-07-20",
+                "typeOfSetAsideDescription": "Veteran-Owned Small Business Set-Aside",
+            }
+            for i in range(10)
+        ]
+
+    return fetch
+
+
+def test_pipeline_fetches_each_page_once(spark, tmp_path):
+    """The sorted pipeline's range sampler and its write both read the
+    ingest; the API must still be called once per page."""
+    markers = tmp_path / "calls"
+    markers.mkdir()
+    n_pages = 12
+    raw = parallel_fetch_plan(spark, n_pages, recording_fetcher(str(markers)))
+    out = str(tmp_path / "snap")
+    snapshot_sink(transform_contracts(filter_veteran_set_asides(raw)), out)
+    calls = Counter(int(name.split(".")[0]) for name in os.listdir(markers))
+    assert calls == Counter(range(n_pages))
+    assert spark.read.parquet(out).count() == n_pages * 10
+
+
+def test_failed_snapshot_write_keeps_previous_snapshot(spark, tmp_path):
+    """A fetch that raises inside the final write job must leave the
+    previous snapshot readable, not an empty directory."""
+    markers = tmp_path / "calls"
+    markers.mkdir()
+    out = str(tmp_path / "snap")
+    snapshot_sink(parallel_fetch_plan(spark, 5, recording_fetcher(str(markers))), out)
+    failing = parallel_fetch_plan(spark, 20, recording_fetcher(str(markers), fail_on=13))
+    with pytest.raises(Exception, match="page 13 unavailable"):
+        snapshot_sink(failing, out)
+    assert spark.read.parquet(out).count() == 50
+
+
 def test_corrupt_json_rows_are_quarantined_not_fatal(spark, tmp_path):
     """PERMISSIVE JSON ingest: malformed rows land in _corrupt_record
     instead of failing the job — the ingest-robustness contract a
@@ -128,8 +231,6 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
-
-import pytest
 
 N_LIVE_ROWS = 230  # 2 full pages of 100 + one short page of 30
 

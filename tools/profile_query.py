@@ -102,13 +102,18 @@ def main() -> None:
             # guard the driver anyway (ADVICE r09): drain df's own
             # toLocalIterator with a row cap, so an ad-hoc profile
             # target with a huge output cannot OOM the driver — at the
-            # cost of partial metrics past the cap.
+            # cost of partial metrics past the cap. toLocalIterator
+            # runs one job per partition, in sequence, so the drain's
+            # wall time is not the query's. One row past the cap is
+            # read so an output of exactly the cap is not reported as
+            # truncated.
             spark.sparkContext.setJobDescription(f"profile:{name}#metrics")
             from itertools import islice
 
-            n_seen = sum(1 for _ in islice(df.toLocalIterator(), 1_000_000))
-            if n_seen == 1_000_000:
-                print(f"  (metrics action capped at {n_seen} rows)")
+            cap = 1_000_000
+            n_seen = sum(1 for _ in islice(df.toLocalIterator(), cap + 1))
+            if n_seen > cap:
+                print(f"  (metrics action capped at {cap} rows)")
             spark.sparkContext.setJobDescription(None)
             mets = execution_metrics(df)
             for op, m in mets.items():
