@@ -6,8 +6,11 @@ flatten/project → clean → derive → enrich → score → sort → SQL top-k
 ONE lazy Catalyst chain of built-in expressions. No Python UDFs anywhere:
 the reference's two row-wise ``.apply`` escapes (``:90`` truthiness,
 ``:102-114`` banded score) lower to ``length(trim(..)) > 0`` and a
-``when`` chain (SURVEY.md §2.10), so the whole pipeline stays inside
-whole-stage codegen.
+``CASE WHEN`` (SURVEY.md §2.10), so the whole pipeline stays inside
+whole-stage codegen. The transform is written as two SQL-text
+projections (clean + parse, then derive + enrich + score) around the
+dropna, so the driver parses two expression lists instead of building
+each expression node as a Column over py4j.
 
 Determinism: the reference derives ``daysSincePosted`` from wall clock
 (``lambda_function.py:88``); here "now" is an injected literal
@@ -18,11 +21,11 @@ exercised.
 
 Null-semantics parity notes (SURVEY.md §1.4):
 
-- ``dropna`` runs on the RAW ``postedDate`` string before the cast, so an
+- ``dropna`` tests the RAW ``postedDate`` string, not its cast, so an
   unparseable-but-present date survives and lands with NULL timestamp,
   NULL ``daysSincePosted``, ``isRecent`` false (pandas ``NaN <= 7`` is
-  False → ``coalesce(.., false)``), and ``recencyScore`` 1 (``when`` on
-  NULL matches no branch → ``otherwise(1)``, same as pandas NaN falling
+  False → ``coalesce(.., false)``), and ``recencyScore`` 1 (``CASE`` on
+  NULL matches no branch → ``ELSE 1``, same as pandas NaN falling
   through every ``elif``).
 - The reference crashes on an explicit JSON null in a defaulted string
   field (``None.strip()``, ``lambda_function.py:70-78``); this engine
@@ -45,7 +48,7 @@ from etl_pipeline_sam_gov_spark.tables import load_tables
 NOW = "2001-07-25"
 
 #: NAICS enrichment dimension (lambda_function.py:94-98) — a 3-row
-#: broadcast dimension; as a literal map it lowers to a `when` chain.
+#: broadcast dimension; as a literal map it lowers to a ``CASE WHEN``.
 NAICS_MAP = {
     "541511": "Custom Computer Programming",
     "541512": "Systems Design Services",
@@ -128,14 +131,76 @@ def synthesize_raw_opportunities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: The P1 predicate as one SQL expression.
+_VETERAN_PREDICATE = (
+    "typeOfSetAsideDescription IS NOT NULL AND ("
+    + " OR ".join(
+        f"contains(typeOfSetAsideDescription, '{kw}')" for kw in VETERAN_KEYWORDS
+    )
+    + ")"
+)
+
+
 def filter_veteran_set_asides(df: DataFrame) -> DataFrame:
     """Substring-containment predicate (P1, lambda_function.py:57-63)."""
-    set_aside = F.col("typeOfSetAsideDescription")
-    keyword_pred = None
-    for kw in VETERAN_KEYWORDS:
-        p = set_aside.contains(kw)
-        keyword_pred = p if keyword_pred is None else (keyword_pred | p)
-    return df.filter(set_aside.isNotNull() & keyword_pred)
+    return df.filter(_VETERAN_PREDICATE)
+
+
+#: 3-row dict-map join at :94-99 → literal CASE (SURVEY.md J1); a real
+#: dimension table would be broadcast-joined instead.
+_NAICS_CASE = (
+    "CASE "
+    + " ".join(f"WHEN naicsCode = '{k}' THEN '{v}'" for k, v in NAICS_MAP.items())
+    + " ELSE 'Other' END"
+)
+
+#: Projection 2, in output column order (FIXTURES.md §A2).
+_ENRICHED = [
+    "noticeId",
+    "title",
+    "solicitationNumber",
+    "agency",
+    "postedDate",
+    "setAside",
+    "naicsCode",
+    "city",
+    "upper(state) AS state",
+    "link",
+    "daysSincePosted",
+    # pandas: NaN <= 7 is False (lambda_function.py:89) → coalesce false
+    "coalesce(daysSincePosted <= 7, false) AS isRecent",
+    # truthiness UDF at :90 → pure expression (SURVEY.md F7)
+    "length(naicsCode) > 0 AS hasNAICS",
+    f"{_NAICS_CASE} AS naicsDescription",
+    # banded scoring UDF at :102-114 → CASE; NULL days matches no
+    # branch → ELSE 1, same as pandas NaN; negative days → 5.
+    "CASE WHEN daysSincePosted <= 1 THEN 5 WHEN daysSincePosted <= 3 THEN 4"
+    " WHEN daysSincePosted <= 5 THEN 3 WHEN daysSincePosted <= 7 THEN 2"
+    " ELSE 1 END AS recencyScore",
+]
+
+
+def _cleaned(now: str) -> list[str]:
+    """Projection 1: flatten officeAddress, default-to-"" + strip
+    (lambda_function.py:70-78), parse the date and count days to
+    ``now``. The raw date string is kept for dropna."""
+    posted = "try_to_timestamp(postedDate)"
+    return [
+        "noticeId",
+        "trim(coalesce(title, '')) AS title",
+        "trim(coalesce(solicitationNumber, '')) AS solicitationNumber",
+        "trim(coalesce(fullParentPathName, '')) AS agency",
+        "postedDate AS postedDateRaw",
+        "trim(coalesce(typeOfSetAsideDescription, '')) AS setAside",
+        "trim(coalesce(naicsCode, '')) AS naicsCode",
+        "trim(coalesce(officeAddress.city, '')) AS city",
+        "trim(coalesce(officeAddress.state, '')) AS state",
+        "trim(coalesce(uiLink, '')) AS link",
+        f"{posted} AS postedDate",
+        # bigint: DuckDB date_diff returns BIGINT, Spark datediff INT; the
+        # driver's value-hash is typed.
+        f"CAST(datediff(to_date('{now}'), to_date({posted})) AS BIGINT) AS daysSincePosted",
+    ]
 
 
 def transform_contracts(raw: DataFrame, now: str = NOW) -> DataFrame:
@@ -145,84 +210,19 @@ def transform_contracts(raw: DataFrame, now: str = NOW) -> DataFrame:
     ``contracts`` table shape (FIXTURES.md §A2), sorted recencyScore
     desc, postedDate desc, nulls last (pandas ``na_position='last'``
     ≡ Spark ``desc_nulls_last``).
+
+    Two SQL-text projections: each is one planner call, where building
+    the same expressions as Column objects costs a py4j round trip per
+    node (~150).
     """
-
-    def clean(c: str):  # default-to-"" + strip (lambda_function.py:70-78)
-        return F.trim(F.coalesce(F.col(c), F.lit("")))
-
-    projected = raw.select(
-        F.col("noticeId"),
-        clean("title").alias("title"),
-        clean("solicitationNumber").alias("solicitationNumber"),
-        clean("fullParentPathName").alias("agency"),
-        F.col("postedDate").alias("postedDateRaw"),
-        clean("typeOfSetAsideDescription").alias("setAside"),
-        clean("naicsCode").alias("naicsCode"),
-        F.trim(F.coalesce(F.col("officeAddress.city"), F.lit(""))).alias("city"),
-        F.trim(F.coalesce(F.col("officeAddress.state"), F.lit(""))).alias("state"),
-        clean("uiLink").alias("link"),
+    # dropna tests the RAW postedDate string (lambda_function.py:86-87):
+    # an unparseable-but-present postedDate survives to the output.
+    cleaned = raw.selectExpr(*_cleaned(now)).na.drop(
+        subset=["noticeId", "title", "postedDateRaw"]
     )
-    # dropna BEFORE the date cast (lambda_function.py:86-87): an
-    # unparseable-but-present postedDate survives to the output.
-    cleaned = projected.na.drop(subset=["noticeId", "title", "postedDateRaw"])
-    posted_ts = F.try_to_timestamp(F.col("postedDateRaw"))
-    # bigint: DuckDB date_diff returns BIGINT, Spark datediff INT; the
-    # driver's value-hash is typed.
-    days = F.datediff(F.to_date(F.lit(now)), F.to_date(posted_ts)).cast("bigint")
-    enriched = (
-        cleaned.withColumn("postedDate", posted_ts)
-        .withColumn("daysSincePosted", days)
-        # pandas: NaN <= 7 is False (lambda_function.py:89) → coalesce false
-        .withColumn("isRecent", F.coalesce(F.col("daysSincePosted") <= 7, F.lit(False)))
-        # truthiness UDF at :90 → pure expression (SURVEY.md F7)
-        .withColumn("hasNAICS", F.length(F.col("naicsCode")) > 0)
-        .withColumn("state", F.upper(F.col("state")))
-        # 3-row dict-map join at :94-99 → literal when-chain (SURVEY.md J1);
-        # a real dimension table would be broadcast-joined instead.
-        .withColumn(
-            "naicsDescription",
-            _when_chain_map("naicsCode", NAICS_MAP, default="Other"),
-        )
-        # banded scoring UDF at :102-114 → when chain; NULL days matches no
-        # branch → otherwise(1), same as pandas NaN; negative days → 5.
-        .withColumn(
-            "recencyScore",
-            F.when(F.col("daysSincePosted") <= 1, 5)
-            .when(F.col("daysSincePosted") <= 3, 4)
-            .when(F.col("daysSincePosted") <= 5, 3)
-            .when(F.col("daysSincePosted") <= 7, 2)
-            .otherwise(1),
-        )
-        .drop("postedDateRaw")
-    )
-    ordered_cols = [
-        "noticeId",
-        "title",
-        "solicitationNumber",
-        "agency",
-        "postedDate",
-        "setAside",
-        "naicsCode",
-        "city",
-        "state",
-        "link",
-        "daysSincePosted",
-        "isRecent",
-        "hasNAICS",
-        "naicsDescription",
-        "recencyScore",
-    ]
-    return enriched.select(*ordered_cols).orderBy(
+    return cleaned.selectExpr(*_ENRICHED).orderBy(
         F.desc_nulls_last("recencyScore"), F.desc_nulls_last("postedDate")
     )
-
-
-def _when_chain_map(col: str, mapping: dict[str, str], default: str):
-    expr = None
-    for k, v in mapping.items():
-        cond = F.col(col) == k
-        expr = F.when(cond, v) if expr is None else expr.when(cond, v)
-    return expr.otherwise(default)
 
 
 def build_contracts(spark: SparkSession, sf_dir: str, now: str = NOW) -> DataFrame:

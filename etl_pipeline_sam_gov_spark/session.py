@@ -65,6 +65,10 @@ RUNTIME_CONFS = {
 }
 
 
+#: The directory holding the package and ``spark_worker_daemon.py``.
+_CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 #: Sessions already configured — configure_runtime is called by every
 #: query via load_tables, and a 100-query sweep over one session should
 #: pay the conf round-trips once, not per query. Weak-keyed (not id()):
@@ -141,6 +145,21 @@ def get_spark(app_name: str = "etl_pipeline_sam_gov_spark") -> SparkSession:
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
+    # Python workers start from spark_worker_daemon (beside the package),
+    # which drops Spark's jar, and its pyspark/py4j zips when the same
+    # version is installed as a directory, from the workers' sys.path.
+    # PySpark's worker calls importlib.invalidate_caches() per task, and
+    # under CPython 3.11 each zipimporter then re-reads its archive's
+    # directory (gh-103200, fixed in 3.12): 16 of them, ~0.2 CPU-s per
+    # task. A mismatched or missing install keeps Spark's zips. The
+    # checkout root goes on the workers' PYTHONPATH so the daemon (and
+    # the package, for UDFs pickled by reference) imports from any
+    # working directory. Only local masters: their executors share this
+    # filesystem; other masters keep Spark's default daemon.
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "spark_worker_daemon"
+        ).config("spark.executorEnv.PYTHONPATH", _CHECKOUT_ROOT)
     # Build-time conf overrides for robustness sweeps (speculation and
     # other scheduler confs are frozen at SparkContext startup, so a
     # runtime spark.conf.set cannot exercise them):

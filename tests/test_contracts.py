@@ -230,3 +230,34 @@ def test_run_pipeline_observe_metrics_match_recompute(spark, sf_dir, tmp_path):
     m2: dict = {}
     run_pipeline(spark, sf_dir, metrics_out=m2)
     assert m2 == metrics
+
+
+#: transform_contracts' optimized logical plan over 20 fetched pages in 4
+#: splits, expression ids stripped, as built from Column objects before
+#: the transform became two SQL-text projections.
+PINNED_TRANSFORM_PLAN = """\
+Sort [recencyScore# DESC NULLS LAST, postedDate# DESC NULLS LAST], true
++- Project [noticeId#, title#, solicitationNumber#, agency#, postedDate#, setAside#, naicsCode#, city#, upper(state#) AS state#, link#, daysSincePosted#, coalesce((daysSincePosted# <= 7), false) AS isRecent#, (length(naicsCode#) > 0) AS hasNAICS#, CASE WHEN (naicsCode# = 541511) THEN Custom Computer Programming WHEN (naicsCode# = 541512) THEN Systems Design Services WHEN (naicsCode# = 561730) THEN Landscaping Services ELSE Other END AS naicsDescription#, CASE WHEN (daysSincePosted# <= 1) THEN 5 WHEN (daysSincePosted# <= 3) THEN 4 WHEN (daysSincePosted# <= 5) THEN 3 WHEN (daysSincePosted# <= 7) THEN 2 ELSE 1 END AS recencyScore#]
+   +- Project [noticeId#, trim(coalesce(title#, ), None) AS title#, trim(coalesce(solicitationNumber#, ), None) AS solicitationNumber#, trim(coalesce(fullParentPathName#, ), None) AS agency#, trim(coalesce(typeOfSetAsideDescription#, ), None) AS setAside#, trim(coalesce(naicsCode#, ), None) AS naicsCode#, trim(coalesce(officeAddress#.city, ), None) AS city#, trim(coalesce(officeAddress#.state, ), None) AS state#, trim(coalesce(uiLink#, ), None) AS link#, cast(postedDate# as timestamp) AS postedDate#, cast(datediff(2001-07-25, cast(cast(postedDate# as timestamp) as date)) as bigint) AS daysSincePosted#]
+      +- Repartition 4, true
+         +- Filter ((isnotnull(typeOfSetAsideDescription#) AND (Contains(typeOfSetAsideDescription#, Veteran-Owned) OR Contains(typeOfSetAsideDescription#, Service-Disabled Veteran-Owned))) AND atleastnnonnulls(3, noticeId#, trim(coalesce(title#, ), None), postedDate#))
+            +- MapInPandas fetch_pages(id#)#, [noticeId#, title#, solicitationNumber#, fullParentPathName#, postedDate#, typeOfSetAsideDescription#, naicsCode#, officeAddress#, uiLink#], false
+               +- Range (0, 20, step=1, splits=Some(4))
+"""
+
+
+def test_transform_optimized_plan_is_pinned(spark):
+    """The SQL-text projections optimize to the same plan as the Column
+    chain they replaced: same expressions, same two Projects (the day
+    count computed once, below its three readers), same pushed filter."""
+    import re
+
+    from etl_pipeline_sam_gov_spark.pipeline.ingest import parallel_fetch_plan
+
+    def no_pages(page_id: int):
+        return []
+
+    raw = parallel_fetch_plan(spark, 20, no_pages, parallelism=4)
+    df = transform_contracts(filter_veteran_set_asides(raw), now=NOW)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert re.sub(r"#\d+L?", "#", plan) == PINNED_TRANSFORM_PLAN

@@ -183,6 +183,65 @@ def test_failed_snapshot_write_keeps_previous_snapshot(spark, tmp_path):
     assert spark.read.parquet(out).count() == 50
 
 
+def test_fetcher_error_surfaces_and_the_session_recovers(spark, tmp_path):
+    """A fetcher raising on page k fails the action with its own message
+    from the Python worker; the next action in the same session runs on
+    fresh workers and returns every row."""
+    from pyspark.errors import PythonException
+
+    markers = tmp_path / "calls"
+    markers.mkdir()
+    failing = parallel_fetch_plan(spark, 8, recording_fetcher(str(markers), fail_on=5))
+    with pytest.raises(PythonException, match="page 5 unavailable"):
+        failing.collect()
+    assert parallel_fetch_plan(spark, 8, ten_per_page()).count() == 80
+
+
+def uneven_pages(sizes: dict[int, int]):
+    """Ten records per page, except pages listed in ``sizes``."""
+
+    def fetch(page_id: int):
+        return [{"noticeId": f"{page_id}-{i}"} for i in range(sizes.get(page_id, 10))]
+
+    return fetch
+
+
+def test_short_and_empty_pages_return_exactly_their_rows(spark):
+    sizes = {2: 3, 4: 0}
+    rows = parallel_fetch_plan(spark, 6, uneven_pages(sizes)).collect()
+    assert sorted(r["noticeId"] for r in rows) == sorted(
+        f"{p}-{i}" for p in range(6) for i in range(sizes.get(p, 10))
+    )
+
+
+def malformed_office_address():
+    """Page 1's second record carries ``officeAddress`` as a string, not
+    the {city, state} object of FIXTURES.md §A1."""
+
+    def fetch(page_id: int):
+        rows = [
+            {"noticeId": f"{page_id}-{i}", "officeAddress": {"city": "Austin", "state": "tx"}}
+            for i in range(3)
+        ]
+        if page_id == 1:
+            rows[1]["officeAddress"] = "Austin, TX"
+        return rows
+
+    return fetch
+
+
+def test_malformed_office_address_is_read_positionally(spark):
+    """Current behaviour, pinned: the pandas → Arrow conversion reads a
+    string ``officeAddress`` as a sequence, so its first two characters
+    become city and state. The record is neither dropped nor fails the
+    job; every other record is intact."""
+    rows = parallel_fetch_plan(spark, 3, malformed_office_address()).collect()
+    got = {r["noticeId"]: r["officeAddress"].asDict() for r in rows}
+    assert len(got) == 9
+    assert got.pop("1-1") == {"city": "A", "state": "u"}
+    assert all(v == {"city": "Austin", "state": "tx"} for v in got.values())
+
+
 def test_corrupt_json_rows_are_quarantined_not_fatal(spark, tmp_path):
     """PERMISSIVE JSON ingest: malformed rows land in _corrupt_record
     instead of failing the job — the ingest-robustness contract a
